@@ -436,8 +436,10 @@ object Relational {
     * row set (madOutlierEvents) can share it.
     */
   private[graft] def percentileProbe(src: DataFrame): Seq[(String, Long, Seq[Double])] = {
-    val parts = src.sparkSession.conf.get("spark.sql.shuffle.partitions", "32").toInt
-    val splitPs = (1 until parts).map(_.toDouble / parts)
+    // at least two slices: one partition would leave no split point, and
+    // percentile_approx over an empty array returns NULL
+    val slices = math.max(src.sparkSession.conf.get("spark.sql.shuffle.partitions", "32").toInt, 2)
+    val splitPs = (1 until slices).map(_.toDouble / slices)
     src.groupBy(col("g"))
       .agg(count(lit(1)).as("n"),
         percentile_approx(col("v"), array(splitPs.map(lit(_)): _*), lit(100)).as("bs"))

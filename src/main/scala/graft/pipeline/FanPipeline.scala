@@ -13,6 +13,9 @@ import graft.sources.CountryLut
   * country LUT → fixed 8-field projection with a nested `LocationData`
   * struct. The whole thing is a single narrow stage after the broadcast —
   * no shuffle — so it scales linearly with input splits on a cluster.
+  * The single-shard sink keeps that stage parallel: it writes one part
+  * file per input split and joins them on the driver, so the one output
+  * file never funnels the scan and transform into one task.
   */
 object FanPipeline {
 

@@ -1,20 +1,32 @@
 package graft.sources
 
-import java.nio.file.{Files, Paths, StandardCopyOption}
+import java.nio.channels.FileChannel
+import java.nio.file.{Files, Paths}
+import java.nio.file.StandardCopyOption.REPLACE_EXISTING
+import java.nio.file.StandardOpenOption.{CREATE_NEW, READ, WRITE}
+
+import scala.jdk.CollectionConverters._
+import scala.util.Using
 
 import org.apache.spark.sql.{DataFrame, Encoders, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
 /** Single-shard JSON-Lines sink with Beam's shard naming
-  * (`{prefix}-00000-of-00001.jsonl`, `/root/reference/src/pipeline.py:292-296`).
+  * (`{prefix}-00000-of-00001.jsonl`, the reference `src/pipeline.py:292-296`,
+  * `num_shards=1`).
   *
   * Rows are serialized with `to_json` over the full row struct with
   * `ignoreNullFields=false`, matching `json.dumps(..., ensure_ascii=False)`
-  * (`/root/reference/src/pipeline.py:200`): raw UTF-8, nulls kept. The
-  * `coalesce(1)` mirrors `num_shards=1` — a deliberate single-writer
-  * collection point, only sane because the reference contract demands one
-  * file; the multi-shard path is just `df.write.json(dir)`.
+  * (reference `src/pipeline.py:200`): raw UTF-8, nulls kept.
+  *
+  * The write stays parallel: every task serializes its own partition into
+  * a part file, so the scan and whatever narrow plan feeds the sink run on
+  * all cores. The driver then joins the part files into the one shard in
+  * ascending (task partition, file counter) order — the order in which a
+  * single writer over the same partitions (`coalesce(1)`) would emit the
+  * rows, so the shard's bytes are the same. A `coalesce(1)` here would be
+  * pushed down through the whole narrow plan and run it in one task.
   */
 object JsonlSink {
 
@@ -67,31 +79,50 @@ object JsonlSink {
     sb.append('"').toString
   }
 
+  /** Spark's part-file name: `part-{task partition}-{job id}-c{file counter}…`;
+    * the counter grows when `maxRecordsPerFile` splits a task's output.
+    */
+  private val PartFile = """part-(\d+)-.*-c(\d+)\..*""".r
+
   /** @param pythonStyle reproduce Python `json.dumps` byte layout
     *   (golden-parity mode) instead of Spark's compact `to_json`.
     */
   def write(df: DataFrame, outputDir: String, prefix: String,
             pythonStyle: Boolean = false): String = {
-    val tmp = Files.createTempDirectory("graft-jsonl-").toString
-    val serialized =
-      if (pythonStyle) {
-        val schema = df.schema
-        df.map(r => pythonJson(r, schema))(Encoders.STRING).toDF("value")
-      } else df.select(
-        to_json(struct(df.columns.map(c => col(s"`$c`")): _*),
-          Map("ignoreNullFields" -> "false")).as("value"))
-    serialized.coalesce(1).write.mode("overwrite").text(tmp)
+    val tmp = Files.createTempDirectory("graft-jsonl-")
+    try {
+      val serialized =
+        if (pythonStyle) {
+          val schema = df.schema
+          df.map(r => pythonJson(r, schema))(Encoders.STRING).toDF("value")
+        } else df.select(
+          to_json(struct(df.columns.map(c => col(s"`$c`")): _*),
+            Map("ignoreNullFields" -> "false")).as("value"))
+      val parts = tmp.resolve("parts")
+      serialized.write.text(parts.toString)
 
-    val part = scala.util.Using.resource(Files.list(Paths.get(tmp)))(
-      _.filter(p => p.getFileName.toString.startsWith("part-")).findFirst()
-        .orElseThrow(() => new IllegalStateException(s"no part file in $tmp")))
-    Files.createDirectories(Paths.get(outputDir))
-    val dest = Paths.get(outputDir, s"$prefix-00000-of-00001.jsonl")
-    Files.move(part, dest, StandardCopyOption.REPLACE_EXISTING)
-    // best-effort cleanup of the temp dir (walk closed — it holds fds)
-    scala.util.Using.resource(Files.walk(Paths.get(tmp)))(
-      _.sorted(java.util.Comparator.reverseOrder())
-        .forEach(p => Files.deleteIfExists(p)))
-    dest.toString
+      val ordered = Using.resource(Files.list(parts))(_.iterator.asScala.toList)
+        .map(p => (p.getFileName.toString, p))
+        .collect { case (PartFile(task, counter), p) => ((task.toInt, counter.toInt), p) }
+        .sortBy(_._1).map(_._2)
+      val staged = tmp.resolve("shard.jsonl")
+      Using.resource(FileChannel.open(staged, CREATE_NEW, WRITE)) { out =>
+        ordered.foreach { p =>
+          Using.resource(FileChannel.open(p, READ)) { in =>
+            val size = in.size()
+            var pos = 0L
+            while (pos < size) pos += in.transferTo(pos, size - pos, out)
+          }
+        }
+      }
+      Files.createDirectories(Paths.get(outputDir))
+      val dest = Paths.get(outputDir, s"$prefix-00000-of-00001.jsonl")
+      Files.move(staged, dest, REPLACE_EXISTING)
+      dest.toString
+    } finally {
+      // walk closed — it holds fds
+      Using.resource(Files.walk(tmp))(
+        _.sorted(java.util.Comparator.reverseOrder()).forEach(p => Files.deleteIfExists(p)))
+    }
   }
 }

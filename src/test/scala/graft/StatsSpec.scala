@@ -15,6 +15,27 @@ class StatsSpec extends AnyFunSuite {
   private def spark = TestSpark.spark
   private def sf = TestSpark.sf0001
 
+  test("quantile family: same rows at 1 shuffle partition as at 4") {
+    // the quantile core slices each group by shuffle-partition count; at
+    // one partition the slicing must still work (it once threw an NPE)
+    val key = "spark.sql.shuffle.partitions"
+    val names = Seq("q_percentiles_dist", "q_quantile_grid", "q_decile_stats",
+      "q_winsorize", "q_mad_outliers")
+    val saved = spark.conf.getOption(key)
+    def rowsAt(parts: Int): Map[String, Seq[String]] =
+      try {
+        spark.conf.set(key, parts.toString)
+        names.map(n => n ->
+          SparkEntry.queries(n)(spark, sf).collect().map(_.toString).sorted.toSeq).toMap
+      } finally saved.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+    val one = rowsAt(1)
+    val four = rowsAt(4)
+    names.foreach { n =>
+      assert(four(n).nonEmpty, n)
+      assert(one(n) == four(n), n)
+    }
+  }
+
   test("spearman: histogram ranks == rank-window formulation, rho in [-1,1]") {
     // the distributed two-phase ranking must agree with the direct
     // rank-window identity 2*RANK + cnt - 1 computed by Spark itself
